@@ -11,9 +11,8 @@ This module provides the scale path: a pure-Python Aho-Corasick automaton
 that finds ALL dictionary occurrences in ONE pass over the text — O(len(text)
 + matches) per turn, independent of |dict| — then applies the same
 word-boundary test the small regime applies. :func:`build_matcher` is the
-two-regime switch (the same shape cc.canonical_map uses for its small/large
-regimes): below ``AUTOMATON_CUTOFF`` aliases the memmem loop wins (measured
-in tests/test_automaton.py), above it the automaton does.
+two-regime switch: below ``AUTOMATON_CUTOFF`` aliases the memmem loop wins
+(measured in tests/test_automaton.py), above it the automaton does.
 
 Worker-side state discipline (the 10^6-alias regime): Spark deserializes a
 fresh copy of the UDF command for EVERY task, so any state held in a closure

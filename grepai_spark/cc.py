@@ -8,9 +8,11 @@ its component minimum (a stable, deterministic id convention).
 Algorithm: alternating large-star / small-star joins (Kiveris et al., "Connected
 Components in MapReduce and Beyond" — see PAPERS.md), which converges in
 O(log n) rounds vs O(diameter) for naive min-propagation. Each round is two
-shuffles (groupBy node). `localCheckpoint` every few rounds truncates the plan
+shuffles (groupBy node). `localCheckpoint` every round truncates the plan
 lineage so the driver doesn't accumulate an unbounded DAG — the iterative-loop
-discipline Catalyst does not provide (SURVEY.md §4).
+discipline Catalyst does not provide (SURVEY.md §4). An edge list that fits
+under dimcache.DRIVER_ROWS_CAP skips the loop: a driver-side union-find with
+the same component-min convention beats its ~10 shuffle jobs of overhead.
 
 Determinism: component id = min member id under string ordering; both star
 operations only ever emit (node, smaller-id) edges, so the fixpoint is unique
@@ -21,6 +23,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from grepai_spark.dimcache import attach_rows, bounded_rows, cached_rows
 
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
@@ -69,14 +73,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     )
 
 
-# Below this many edges the graph fits comfortably on the driver; a
-# collect + union-find beats ~10 shuffle jobs of star-iteration overhead.
-# Same two-regime logic as broadcast-vs-shuffle join selection: the
-# distributed large-star/small-star loop is the corpus-scale path, this is
-# the dictionary-scale path. Results are identical (component = min id).
-SMALL_GRAPH_EDGES = 100_000
-
-
 def _union_find(rows: list) -> list[tuple[str, str]]:
     """Pure driver-side union-find: edge rows -> sorted (node, component)
     pairs with component = min member id (the distributed fixpoint's id
@@ -107,32 +103,22 @@ def _union_find(rows: list) -> list[tuple[str, str]]:
     return [(n, find(n)) for n in sorted(nodes)]
 
 
-def _union_find_components(rows: list, spark) -> DataFrame:
-    return spark.createDataFrame(
-        _union_find(rows), "node string, component string"
-    )
-
-
-def connected_components(
-    edges: DataFrame,
-    max_iter: int = 50,
-    checkpoint_every: int = 3,
-    small_cutoff: int = SMALL_GRAPH_EDGES,
-) -> DataFrame:
+def connected_components(edges: DataFrame, max_iter: int = 50) -> DataFrame:
     """edges(src, dst) -> (node, component) for every node appearing in edges.
 
     Isolated nodes don't appear; callers union them back (component = self).
     """
-    if small_cutoff:
-        # self-loops included: their nodes must appear in the output
-        # (component = self), same as the distributed path below
-        head = (
-            edges.select("src", "dst")
-            .limit(small_cutoff + 1)
-            .collect()
+    # self-loops included: their nodes must appear in the output
+    # (component = self), same as the distributed path below
+    rows = bounded_rows(edges)
+    if rows is not None:
+        comp = _union_find(rows)
+        return attach_rows(
+            edges.sparkSession.createDataFrame(
+                comp, "node string, component string"
+            ),
+            comp,
         )
-        if len(head) <= small_cutoff:
-            return _union_find_components(head, edges.sparkSession)
 
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -173,54 +159,23 @@ def connected_components(
     return comp.union(missing)
 
 
-# Below this many dictionary rows the whole canonical map is computed on
-# the driver (one limit-collect each for dict and edges, union-find, one
-# LocalRelation out) — r7: the distributed shape paid a distinct shuffle +
-# broadcast join job per call for a dictionary-scale product. Same
-# two-regime pattern (and the same Python string-min convention) as
-# connected_components' small-graph path.
-SMALL_DICT_ROWS = 100_000
-
-
 def canonical_map(
     alias_dict: DataFrame, link_edges: DataFrame
 ) -> DataFrame:
     """canonical_id -> entity_id (component min) for EVERY dictionary entity,
-    including singletons."""
-    from grepai_spark.dimcache import attach_rows, attached_rows, cached_rows
+    including singletons.
 
-    head = cached_rows(alias_dict)
-    if len(head) <= SMALL_DICT_ROWS:
-        # prefer edge rows a driver-side producer already holds (the small
-        # similarity regime attaches them); otherwise one bounded probe
-        edges = attached_rows(link_edges)
-        if edges is None:
-            edges = (
-                link_edges.select("src", "dst")
-                .limit(SMALL_GRAPH_EDGES + 1)
-                .collect()
-            )
-        if len(edges) <= SMALL_GRAPH_EDGES:
-            comp = dict(_union_find(edges))
-            rows = [
-                (c, comp.get(c, c))
-                for c in sorted({r["canonical_id"] for r in head})
-            ]
-            return attach_rows(
-                alias_dict.sparkSession.createDataFrame(
-                    rows, "canonical_id string, entity_id string"
-                ),
-                rows,
-            )
-    cc = connected_components(link_edges)
-    all_canon = alias_dict.select(
-        F.col("canonical_id").alias("node")
-    ).distinct()
-    return (
-        # component map is dictionary-scale — broadcast, never SMJ
-        all_canon.join(F.broadcast(cc), "node", "left")
-        .select(
-            F.col("node").alias("canonical_id"),
-            F.coalesce("component", "node").alias("entity_id"),
-        )
+    Computed on the driver: the dictionary is driver-resident, and the
+    component rows are either attached by the union-find path of
+    connected_components or bounded by the dictionary's canonical ids."""
+    comp = dict(cached_rows(connected_components(link_edges)))
+    rows = [
+        (c, comp.get(c, c))
+        for c in sorted({r["canonical_id"] for r in cached_rows(alias_dict)})
+    ]
+    return attach_rows(
+        alias_dict.sparkSession.createDataFrame(
+            rows, "canonical_id string, entity_id string"
+        ),
+        rows,
     )

@@ -26,7 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from grepai_spark.cc import connected_components
-from grepai_spark.dedup import JACCARD_THRESHOLD, minhash_lsh_pairs
+from grepai_spark.dedup import minhash_lsh_pairs
+from grepai_spark.naming import JACCARD_THRESHOLD
 from grepai_spark.textstats import quality_score_sql
 
 QUALITY_MIN = 0.8

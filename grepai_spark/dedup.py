@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from grepai_spark.naming import JACCARD_THRESHOLD
+
 SHINGLE_N = 3
 DF_CAP = 100  # max docs sharing a shingle before it is dropped as a hub
 MINHASH_BANDS = 4
@@ -35,7 +37,6 @@ MINHASH_ROWS = 2
 SIMHASH_BITS = 32
 SIMHASH_BANDS = 4
 SIMHASH_MAX_HAMMING = 3
-JACCARD_THRESHOLD = 0.5  # mirrors /root/reference/rpg/indexer.go:19
 
 
 # ---------------------------------------------------------------------------

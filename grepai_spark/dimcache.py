@@ -1,4 +1,5 @@
-"""Loaded-dimension row cache — the reference's in-RAM model tables.
+"""Loaded-dimension row cache — the reference's in-RAM model tables — and
+the one driver-size probe.
 
 The reference loads its dictionary and graph model into memory once per
 process and serves every lookup from RAM (symbol maps rpg/indexer.go:527,
@@ -20,10 +21,13 @@ Two sources, in priority order:
   content) means a re-created DataFrame over changed data can never serve
   stale rows — the cache dies with the handle.
 
-ONLY for dimension tables whose backing data is immutable for the handle's
-lifetime (the session-memoized alias dict, LocalRelations, per-session
-store artifacts). Never cache corpus-scale query results here — collecting
-them is the anti-pattern this module exists to avoid.
+``cached_rows`` is ONLY for dimension tables whose backing data is
+immutable for the handle's lifetime (the session-memoized alias dict,
+LocalRelations, per-session store artifacts). Inputs that may be
+corpus-scale (a near-dup pair graph, a stored adjacency) go through
+``bounded_rows`` instead: it loads them only when a ``limit`` probe shows
+they fit under ``DRIVER_ROWS_CAP``, and otherwise leaves the caller on its
+distributed path.
 """
 
 from __future__ import annotations
@@ -31,6 +35,13 @@ from __future__ import annotations
 from weakref import WeakKeyDictionary
 
 from pyspark.sql import DataFrame
+
+# The one driver-size cutoff: an input with at most this many rows is
+# processed on the driver (union-find, BFS over a dict adjacency) instead
+# of by an iterative distributed loop whose per-round job overhead
+# dominates at this size. Read at call time, so a test can set it to 0 to
+# force every distributed branch.
+DRIVER_ROWS_CAP = 100_000
 
 _ROWS: "WeakKeyDictionary[DataFrame, list]" = WeakKeyDictionary()
 
@@ -41,12 +52,6 @@ def attach_rows(df: DataFrame, rows: list) -> DataFrame:
     return df
 
 
-def attached_rows(df: DataFrame) -> list | None:
-    """Rows previously attached/collected for this handle, else None —
-    never triggers a job."""
-    return _ROWS.get(df)
-
-
 def cached_rows(df: DataFrame) -> list:
     """Collect (once per handle) and memoize the full row list."""
     rows = _ROWS.get(df)
@@ -54,3 +59,16 @@ def cached_rows(df: DataFrame) -> list:
         rows = df.collect()
         _ROWS[df] = rows
     return rows
+
+
+def bounded_rows(df: DataFrame) -> list | None:
+    """The full row list of `df` if it has at most DRIVER_ROWS_CAP rows,
+    else None. Rows already attached or collected for the handle cost
+    nothing; otherwise one ``limit(cap + 1)`` probe runs. Probed rows are
+    not memoized: the handle may not be a dimension (see the module
+    docstring), so a producer that owns it attaches them explicitly."""
+    cap = DRIVER_ROWS_CAP
+    rows = _ROWS.get(df)
+    if rows is None:
+        rows = df.limit(cap + 1).collect()
+    return rows if len(rows) <= cap else None

@@ -18,11 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from grepai_spark.dimcache import bounded_rows
 from grepai_spark.naming import jaccard_sql, norm_tokens_sql
-
-# adjacency sizes up to this run BFS on the driver (see bfs); mirrors
-# cc.SMALL_GRAPH_EDGES
-SMALL_ADJ_EDGES = 100_000
 
 
 def _seg(expr_sql: str) -> "F.Column":
@@ -95,26 +92,18 @@ def bfs(
         # hub guard: degree pre-computation, expansion skips heavy nodes
         deg = adj.groupBy("a").agg(F.count("*").alias("deg"))
 
-    # r7 small-graph driver regime (the cc.py two-regime pattern): a
-    # collectable adjacency runs the whole traversal on the driver — the
-    # distributed loop costs ~3 jobs per hop (join, checkpoint, isEmpty)
-    # of pure scheduling overhead on a graph that fits in one hand. Rows
-    # already loaded by the graph model (stores.graph_adjacency attaches
-    # them via dimcache) are reused; otherwise one limit-collect probes the
-    # size — at graph scale it reads cutoff+1 rows and the iterative path
-    # below is untouched.
-    from grepai_spark.dimcache import attached_rows
-
-    head = attached_rows(adj)
-    if head is None:
-        head = adj.limit(SMALL_ADJ_EDGES + 1).collect()
+    # an adjacency under dimcache.DRIVER_ROWS_CAP is traversed on the
+    # driver — the distributed loop costs ~3 jobs per hop (join,
+    # checkpoint, isEmpty) of pure scheduling overhead on a graph that fits
+    # in one hand. Rows already loaded by the graph model
+    # (stores.graph_adjacency) cost nothing; otherwise one limit probe
+    # sizes the adjacency, and at graph scale the iterative path below runs.
+    head = bounded_rows(adj)
     spark = edges.sparkSession
-    if len(head) <= SMALL_ADJ_EDGES:
-        deg_rows = attached_rows(deg)
-        if deg_rows is None:
-            deg_rows = deg.collect()
+    if head is not None:
+        # |deg| <= |adj|: the degree census fits whenever the adjacency does
         expandable_s = {
-            r["a"] for r in deg_rows if r["deg"] <= hub_cap
+            r["a"] for r in bounded_rows(deg) if r["deg"] <= hub_cap
         }
         nbrs: dict[str, list[str]] = {}
         for r in head:
@@ -146,7 +135,6 @@ def bfs(
     # re-executed per depth level.
     adj_ok = adj.join(expandable, "a").localCheckpoint(eager=True)
 
-    spark = edges.sparkSession
     visited = spark.createDataFrame([(seed, 0)], ["node", "depth"])
     frontier = visited
     for d in range(1, depth + 1):

@@ -10,65 +10,59 @@ Two linking paths, mirroring the reference:
   within a block (first normalized token), Jaccard >= 0.5 creates a
   same-entity link edge; blocks are capped to bound the O(k^2) pair explosion,
   exactly the reference's own skew mitigation (verb blocking + block cap 100,
-  /root/reference/rpg/indexer.go:17-27,661-757).
+  /root/reference/rpg/indexer.go:17-27,661-757). A MinHash-banded variant
+  replaces the first-token block with LSH band keys.
 
-A MinHash banding block key is provided as the scale path (LSH prefilter per
-the north rule): at 10^12 turns first-token blocks can still be huge; MinHash
-bands keep candidate sets sublinear. Both paths feed the same Jaccard verify.
+The alias dictionary is a driver-resident dimension, as the reference keeps
+its symbol maps in RAM (rpg/indexer.go:527): the mention detectors already
+collect it whole for their broadcasts, so linking reads the same rows
+through dimcache and computes the similarity pairs on the driver with the
+Python twins of the naming SQL (lockstep-tested in tests/test_naming_dialect).
+The DuckDB oracles replay the blocking and banding in SQL
+(oracles.alias_sim_edges_oracle).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+import hashlib
+from collections.abc import Callable, Iterable
+
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from grepai_spark.naming import first_token_sql, jaccard_sql, norm_tokens_sql
+from grepai_spark.dimcache import attach_rows, cached_rows
+from grepai_spark.naming import (
+    JACCARD_THRESHOLD,
+    py_first_token,
+    py_jaccard,
+    py_norm_tokens,
+)
 
-JACCARD_THRESHOLD = 0.5  # ref: rpg/indexer.go:19
 BLOCK_CAP = 100  # ref: maxFeatureGroupSize, rpg/indexer.go:20
 
 
-def with_norm_tokens(alias_dict: DataFrame) -> DataFrame:
-    return alias_dict.withColumn("norm_tokens", F.expr(norm_tokens_sql("alias")))
-
-
-# Below this many dictionary rows the similarity linking runs on the driver
-# (collect + pure-Python twins) instead of as ~5 tiny shuffle jobs — the same
-# two-regime shape as cc.SMALL_GRAPH_EDGES. The Python twins
-# (py_first_token / py_norm_tokens / py_jaccard) are lockstep-tested against
-# the SQL expressions (tests/test_naming_dialect), so regime choice cannot
-# change the edge set; non-ASCII aliases fall back to the distributed path
-# because Python code-point ordering and Java UTF-16 ordering only provably
-# agree on ASCII (the cap's deterministic order depends on it).
-SMALL_DICT_ROWS = 10_000
-
-
-def _collect_small_dict(alias_dict: DataFrame) -> list | None:
-    """The dict's rows if it is small and ASCII-only, else None. Goes
-    through the loaded-dimension cache (dimcache): the dictionary
-    is a collectable broadcast-side dimension by design (the detectors
-    collect it wholesale for their broadcast payloads), so one collect per
-    handle serves every linking call in the session — a limit-probe here
-    measured SLOWER than a plain collect (executeTake runs multiple jobs)."""
-    from grepai_spark.dimcache import cached_rows
-
-    rows = cached_rows(alias_dict)
-    if len(rows) > SMALL_DICT_ROWS:
-        return None
-    if any(max(r["alias"]) >= "\x80" for r in rows if r["alias"]):
-        return None
-    return rows
-
-
-def _py_pairs_from_buckets(
-    buckets: dict[str, list], threshold: float, cap: int
-) -> list[tuple[str, str]]:
-    """Shared verify step of both driver-side regimes: within each bucket,
-    cap members (already alias-sorted), pair a.alias < b.alias with distinct
-    canonical ids, keep Jaccard >= threshold. Same float arithmetic as the
-    SQL (len ints -> IEEE double division)."""
-    from grepai_spark.naming import py_jaccard
-
+def _similar_pairs(
+    alias_dict: DataFrame,
+    bucket_keys: Callable[[str, list[str]], Iterable[str]],
+    threshold: float,
+    cap: int,
+) -> DataFrame:
+    """Shared body of both similarity paths: bucket every alias with tokens
+    under each key `bucket_keys(alias, tokens)` yields (alias order), cap
+    each bucket at `cap` members, pair a.alias < b.alias with distinct
+    canonical ids and keep Jaccard >= threshold. Same float arithmetic as
+    the SQL (len ints -> IEEE double division). The pairs come back as a
+    LocalRelation with its rows attached, so canonicalization reads them
+    without a job."""
+    buckets: dict[str, list] = {}
+    for r in sorted(cached_rows(alias_dict), key=lambda r: r["alias"]):
+        toks = py_norm_tokens(r["alias"])
+        if not toks:
+            continue
+        for key in bucket_keys(r["alias"], toks):
+            buckets.setdefault(key, []).append(
+                (r["alias"], r["canonical_id"], toks)
+            )
     out: set[tuple[str, str]] = set()
     for members in buckets.values():
         members = members[:cap]
@@ -80,26 +74,28 @@ def _py_pairs_from_buckets(
                     continue
                 if py_jaccard(a_toks, b_toks) >= threshold:
                     out.add((a_cid, b_cid))
-    return sorted(out)
+    pairs = sorted(out)
+    return attach_rows(
+        alias_dict.sparkSession.createDataFrame(
+            pairs, "src string, dst string"
+        ),
+        pairs,
+    )
 
 
 def link_mentions_exact(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """mention rows -> + canonical_id via broadcast exact join on surface form.
 
-    r7: for a collectable dictionary the (alias, canonical_id) dim is
-    deduped on the driver from the loaded-dimension rows — the .distinct()
-    was a shuffle job on every call just to dedupe the broadcast side."""
-    from grepai_spark.dimcache import cached_rows
-
-    rows = cached_rows(alias_dict)
-    if len(rows) <= SMALL_DICT_ROWS:
-        pairs = sorted({(r["alias"], r["canonical_id"]) for r in rows})
-        dim_df = mentions.sparkSession.createDataFrame(
+    The (alias, canonical_id) dim is deduped on the driver from the
+    loaded-dimension rows, so no call pays a distinct shuffle job."""
+    pairs = sorted(
+        {(r["alias"], r["canonical_id"]) for r in cached_rows(alias_dict)}
+    )
+    dim = F.broadcast(
+        mentions.sparkSession.createDataFrame(
             pairs, "alias string, canonical_id string"
         )
-    else:
-        dim_df = alias_dict.select("alias", "canonical_id").distinct()
-    dim = F.broadcast(dim_df)
+    )
     return mentions.join(dim, mentions["mention"] == dim["alias"], "left").drop(
         "alias"
     )
@@ -112,68 +108,16 @@ def alias_similarity_edges(
 ) -> DataFrame:
     """(src, dst) canonical-id pairs whose aliases are Jaccard-similar.
 
-    Blocked self-join: block key = first normalized token. Within a block only
-    the first `block_cap` aliases (deterministic alias order) participate in
-    pairing — the reference's cap against quadratic blowup. The pair join is an
-    equi-join on the block key, so Spark shuffles once on the (tiny) dict; at
-    dictionary scale this is trivially broadcastable, and the same shape holds
-    for mention-level dedup at corpus scale.
-
-    r7: small ASCII dictionaries (the common serving case — the reference
-    holds the whole dictionary in RAM) run entirely on the driver via the
-    lockstep-tested Python twins: one limit-collect, zero shuffle jobs.
+    Block key = first normalized token of the SURFACE order, like the
+    reference's verb blocking (not the sorted token set's minimum). Within
+    a block only the first `block_cap` aliases (deterministic alias order)
+    participate in pairing — the reference's cap against quadratic blowup.
     """
-    head = _collect_small_dict(alias_dict)
-    if head is not None:
-        from grepai_spark.naming import py_first_token, py_norm_tokens
-
-        buckets: dict[str, list] = {}
-        for r in sorted(head, key=lambda r: r["alias"]):
-            toks = py_norm_tokens(r["alias"])
-            if not toks:
-                continue
-            blk = py_first_token(r["alias"])
-            buckets.setdefault(blk, []).append(
-                (r["alias"], r["canonical_id"], toks)
-            )
-        pairs = _py_pairs_from_buckets(buckets, threshold, block_cap)
-        from grepai_spark.dimcache import attach_rows
-
-        return attach_rows(
-            alias_dict.sparkSession.createDataFrame(
-                pairs, "src string, dst string"
-            ),
-            pairs,
-        )
-    d = (
-        with_norm_tokens(alias_dict)
-        .where(F.size("norm_tokens") > 0)
-        .select(
-            "alias",
-            "canonical_id",
-            "norm_tokens",
-            # block by the SURFACE-order first word, like the reference's verb
-            # blocking — not the sorted token set's minimum.
-            F.expr(first_token_sql("alias")).alias("block"),
-        )
-    )
-    w = Window.partitionBy("block").orderBy("alias")
-    d = d.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= block_cap
-    )
-    a = d.alias("a")
-    b = d.alias("b")
-    jac = F.expr(jaccard_sql("a.norm_tokens", "b.norm_tokens"))
-    return (
-        a.join(b, on=F.col("a.block") == F.col("b.block"))
-        .where(F.col("a.alias") < F.col("b.alias"))
-        .where(F.col("a.canonical_id") != F.col("b.canonical_id"))
-        .where(jac >= F.lit(threshold))
-        .select(
-            F.col("a.canonical_id").alias("src"),
-            F.col("b.canonical_id").alias("dst"),
-        )
-        .dropDuplicates(["src", "dst"])
+    return _similar_pairs(
+        alias_dict,
+        lambda alias, toks: (py_first_token(alias),),
+        threshold,
+        block_cap,
     )
 
 
@@ -228,53 +172,14 @@ LSH_ROWS = 2
 LSH_BUCKET_CAP = 200  # same role as BLOCK_CAP, per band bucket
 
 
-def minhash_link_sql(tokens_col: str, seed: int, dialect: str = "spark") -> str:
-    """MinHash_seed(tokens) = lexicographic min of md5('<seed>:'||token) —
-    the SAME md5-keyed lockstep twin the dedup signatures use
-    (dedup.minhash_sql): md5 hex strings are identical in Spark, DuckDB and
-    Python, so the banding is replayable verbatim inside a DuckDB oracle
-    (xxhash64, the previous key, exists only Spark-side and made the LSH
-    linking path uncheckable by the driver's cross-engine gate)."""
-    if dialect == "spark":
-        return (
-            f"array_min(transform({tokens_col},"
-            f" t -> md5(concat('{seed}:', t))))"
-        )
+def minhash_link_sql(tokens_col: str, seed: int) -> str:
+    """DuckDB twin of the driver-side band minhash: MinHash_seed(tokens) =
+    lexicographic min of md5('<seed>:'||token). md5 hex strings are
+    identical in Python and DuckDB, so the oracle replays the banding —
+    and with it the per-bucket cap — bucket for bucket."""
     return (
         f"list_aggregate(list_transform({tokens_col},"
         f" t -> md5('{seed}:' || t)), 'min')"
-    )
-
-
-def minhash_block_key(
-    df: DataFrame,
-    tokens_col: str = "norm_tokens",
-    bands: int = LSH_BANDS,
-    rows_per_band: int = LSH_ROWS,
-) -> DataFrame:
-    """Attach MinHash LSH band keys: explode to one row per band.
-
-    minhash_i(tokens) = min over tokens of md5('<i>:'||token); a band key
-    concatenates the band index and `rows_per_band` consecutive minhashes
-    into one string. Two sets sharing any band key become join candidates —
-    the standard banding scheme (see PAPERS.md), replacing the reference's
-    single-token verb block for skewed dictionaries. Pure built-in exprs —
-    JVM-side, no UDF — and md5-keyed so a DuckDB oracle replays the exact
-    candidate set (see minhash_link_sql).
-    """
-    band_cols = []
-    for bnd in range(bands):
-        parts = [
-            F.expr(minhash_link_sql(tokens_col, bnd * rows_per_band + r))
-            for r in range(rows_per_band)
-        ]
-        band_cols.append(
-            F.concat_ws("|", F.lit(str(bnd)), *parts).alias(f"bk{bnd}")
-        )
-    df = df.select("*", F.array(*band_cols).alias("_bands"))
-    return df.select(
-        *[c for c in df.columns if c != "_bands"],
-        F.explode("_bands").alias("band_key"),
     )
 
 
@@ -285,74 +190,26 @@ def alias_similarity_edges_lsh(
     rows_per_band: int = LSH_ROWS,
     bucket_cap: int = LSH_BUCKET_CAP,
 ) -> DataFrame:
-    """LSH-banded variant of alias_similarity_edges (scale path).
+    """LSH-banded variant of alias_similarity_edges.
 
-    Candidates = pairs sharing a band key; verified with exact Jaccard. A
-    superset-recall prefilter: anything the banding misses was below ~0.3
-    similarity with high probability. Band buckets are capped at
-    `bucket_cap` members (deterministic alias order — the same discipline
-    as BLOCK_CAP and the dedup DF_CAP) so one degenerate bucket can never
-    go quadratic at dictionary scale.
-
-    r7: same small-ASCII-dictionary driver regime as
-    :func:`alias_similarity_edges` — hashlib md5 hex equals Spark/DuckDB
-    md5 hex, so the banding replays exactly.
+    Band key = band index + `rows_per_band` consecutive minhashes, each the
+    min over tokens of md5('<i>:'||token); two alias sets sharing any band
+    key become candidates (the standard banding scheme, see PAPERS.md),
+    verified with exact Jaccard. A superset-recall prefilter: anything the
+    banding misses was below ~0.3 similarity with high probability. Band
+    buckets are capped at `bucket_cap` members (deterministic alias order —
+    the same discipline as BLOCK_CAP and the dedup DF_CAP).
     """
-    head = _collect_small_dict(alias_dict)
-    if head is not None:
-        import hashlib
 
-        from grepai_spark.naming import py_norm_tokens
+    def band_keys(alias: str, toks: list[str]) -> list[str]:
+        r = rows_per_band
+        mins = [
+            min(hashlib.md5(f"{i}:{t}".encode()).hexdigest() for t in toks)
+            for i in range(bands * r)
+        ]
+        return [
+            "|".join([str(bnd), *mins[bnd * r : bnd * r + r]])
+            for bnd in range(bands)
+        ]
 
-        buckets: dict[str, list] = {}
-        for r in sorted(head, key=lambda r: r["alias"]):
-            toks = py_norm_tokens(r["alias"])
-            if not toks:
-                continue
-            for bnd in range(bands):
-                mins = [
-                    min(
-                        hashlib.md5(
-                            f"{bnd * rows_per_band + rr}:{t}".encode()
-                        ).hexdigest()
-                        for t in toks
-                    )
-                    for rr in range(rows_per_band)
-                ]
-                key = "|".join([str(bnd), *mins])
-                buckets.setdefault(key, []).append(
-                    (r["alias"], r["canonical_id"], toks)
-                )
-        pairs = _py_pairs_from_buckets(buckets, threshold, bucket_cap)
-        from grepai_spark.dimcache import attach_rows
-
-        return attach_rows(
-            alias_dict.sparkSession.createDataFrame(
-                pairs, "src string, dst string"
-            ),
-            pairs,
-        )
-    d = (
-        with_norm_tokens(alias_dict)
-        .where(F.size("norm_tokens") > 0)
-        .select("alias", "canonical_id", "norm_tokens")
-    )
-    banded = minhash_block_key(d, bands=bands, rows_per_band=rows_per_band)
-    w = Window.partitionBy("band_key").orderBy("alias")
-    banded = banded.withColumn("rn", F.row_number().over(w)).where(
-        F.col("rn") <= bucket_cap
-    )
-    a = banded.alias("a")
-    b = banded.alias("b")
-    jac = F.expr(jaccard_sql("a.norm_tokens", "b.norm_tokens"))
-    return (
-        a.join(b, on=F.col("a.band_key") == F.col("b.band_key"))
-        .where(F.col("a.alias") < F.col("b.alias"))
-        .where(F.col("a.canonical_id") != F.col("b.canonical_id"))
-        .where(jac >= F.lit(threshold))
-        .select(
-            F.col("a.canonical_id").alias("src"),
-            F.col("b.canonical_id").alias("dst"),
-        )
-        .dropDuplicates(["src", "dst"])
-    )
+    return _similar_pairs(alias_dict, band_keys, threshold, bucket_cap)

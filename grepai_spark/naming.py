@@ -105,10 +105,13 @@ def first_token_sql(col: str, dialect: str = "spark") -> str:
     return f"coalesce(list_filter({split}, x -> x != '')[1], '')"
 
 
+JACCARD_THRESHOLD = 0.5  # ref: rpg/indexer.go:19
+
+
 def jaccard_sql(a: str, b: str, dialect: str = "spark") -> str:
-    """Jaccard over two token arrays; threshold 0.5 mirrors the reference
-    (/root/reference/rpg/indexer.go:19, calculateJaccardSimilarity
-    rpg/indexer.go:496-518)."""
+    """Jaccard over two token arrays, compared against JACCARD_THRESHOLD by
+    linking, dedup and the golden oracle (the reference's
+    calculateJaccardSimilarity, rpg/indexer.go:496-518)."""
     if dialect == "spark":
         return (
             f"CAST(size(array_intersect({a}, {b})) AS DOUBLE)"

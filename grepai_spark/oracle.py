@@ -16,9 +16,13 @@ import re
 from collections import defaultdict
 from dataclasses import dataclass
 
-from grepai_spark.naming import py_first_token, py_jaccard, py_norm_tokens
+from grepai_spark.naming import (
+    JACCARD_THRESHOLD,
+    py_first_token,
+    py_jaccard,
+    py_norm_tokens,
+)
 
-JACCARD_THRESHOLD = 0.5  # ref: /root/reference/rpg/indexer.go:19
 _FENCE = re.compile(r"```.*?```", re.S)
 
 

@@ -20,10 +20,6 @@ from grepai_spark.synth import alias_dict_values_sql, transcripts_sql
 TRANSCRIPTS_REL = transcripts_sql("events", "duckdb")
 
 
-def transcripts_oracle() -> str:
-    return TRANSCRIPTS_REL
-
-
 def call_triples_oracle() -> str:
     return f"""
 SELECT role AS subj, 'calls' AS pred, tool AS obj, conv_id, turn_idx,
@@ -51,10 +47,11 @@ def _norm_dict_cte(lsh: bool = False, dict_rel: str | None = None) -> str:
     """`nd` + `sim` CTEs: the alias dictionary with normalized tokens and
     the similarity edge set — via the first-token block (the reference's
     verb blocking, default) or the MinHash-LSH banding (`lsh=True`, the
-    north rule's scale prefilter). The LSH replay uses the IDENTICAL
-    md5-keyed minhash as the Spark side (link.minhash_link_sql), so the
-    candidate set — including the deterministic per-bucket cap — matches
-    bucket-for-bucket, not just in aggregate. `dict_rel` overrides the
+    north rule's scale prefilter). The LSH replay computes the same
+    md5-keyed minhashes (link.minhash_link_sql) as the driver-side banding
+    of link.alias_similarity_edges_lsh, so the candidate set — including
+    the deterministic per-bucket cap — matches bucket-for-bucket, not just
+    in aggregate. `dict_rel` overrides the
     fixture dictionary (the dialect-parity tests drive hostile dicts
     through the same replay)."""
     toks = norm_tokens_sql("alias", "duckdb")
@@ -71,9 +68,7 @@ def _norm_dict_cte(lsh: bool = False, dict_rel: str | None = None) -> str:
             "'{b}|' || {parts}".format(
                 b=bnd,
                 parts=" || '|' || ".join(
-                    minhash_link_sql(
-                        "norm_tokens", bnd * LSH_ROWS + r, "duckdb"
-                    )
+                    minhash_link_sql("norm_tokens", bnd * LSH_ROWS + r)
                     for r in range(LSH_ROWS)
                 ),
             )

@@ -60,13 +60,7 @@ def kg_edges_df(
 # fraction. The reference equivalently LOADS its persisted symbol maps
 # instead of re-indexing (rpg/persistence.go). Values are plain dicts (no
 # Spark handles), so entries stay valid across sessions in one process.
-_AMAP_MEMO: dict[tuple[int, int, bool], dict[str, tuple[str, str]]] = {}
-
-
-# dictionaries up to this size resolve the map fully on the driver (the
-# dictionary is a collectable broadcast-side dimension by design; the old
-# path collected it wholesale anyway for the detector broadcast)
-_SMALL_DICT_ROWS = 100_000
+_AMAP_MEMO: dict[tuple[int, str, bool], dict[str, tuple[str, str]]] = {}
 
 
 def alias_entity_map(
@@ -74,61 +68,22 @@ def alias_entity_map(
 ) -> dict[str, tuple[str, str]]:
     """alias -> (pred, entity_id): the dictionary-scale product of linking +
     canonicalization, computed ONCE per run/dictionary version (memoized on
-    a content signature across calls) and shipped to executors via
+    a sha256 of the dictionary's rows) and shipped to executors via
     SparkContext.broadcast (inside make_edge_detector) — the reference's
-    in-memory symbol maps (rpg/indexer.go:527).
-
-    r7: for collectable dictionaries the signature is hashed on the driver
-    from ONE limit-collect (the previous per-call signature was its own
-    aggregate job — pure serial overhead on every kg_edges derivation), and
-    on a memo miss the final alias->entity join happens driver-side too.
+    in-memory symbol maps (rpg/indexer.go:527). The dictionary is
+    driver-resident, so the signature and the final alias -> entity join
+    are computed on the driver from its loaded rows.
     """
     import hashlib
 
     from grepai_spark.dimcache import cached_rows
 
     rows = cached_rows(alias_dict)
-    if len(rows) <= _SMALL_DICT_ROWS:
-        h = hashlib.sha256()
-        for r in sorted(
-            (r["alias"], r["canonical_id"], r["kind"]) for r in rows
-        ):
-            h.update("\x01".join(r).encode())
-            h.update(b"\x00")
-        key = (len(rows), h.hexdigest(), use_lsh)
-        cached = _AMAP_MEMO.get(key)
-        if cached is not None:
-            return cached
-        sim = (
-            link.alias_similarity_edges_lsh(alias_dict)
-            if use_lsh
-            else link.alias_similarity_edges(alias_dict)
-        )
-        cdict = {
-            r[0]: r[1]
-            for r in cached_rows(cc.canonical_map(alias_dict, sim))
-        }
-        amap = {
-            r["alias"]: (
-                "does" if r["kind"] == "action" else "mentions",
-                cdict[r["canonical_id"]],
-            )
-            for r in rows
-            if r["kind"] in ("entity", "action")
-        }
-        _AMAP_MEMO[key] = amap
-        return amap
-
-    # large-dictionary regime: order-insensitive content signature; mod a
-    # prime keeps the ANSI-mode sum overflow-free (same discipline as
-    # lineage.bucket_content_hashes)
-    sig = alias_dict.agg(
-        F.count("*").alias("n"),
-        F.sum(
-            F.xxhash64("alias", "canonical_id", "kind") % F.lit(1_000_000_007)
-        ).alias("h"),
-    ).first()
-    key = (sig["n"], sig["h"], use_lsh)
+    h = hashlib.sha256()
+    for r in sorted((r["alias"], r["canonical_id"], r["kind"]) for r in rows):
+        h.update("\x01".join(r).encode())
+        h.update(b"\x00")
+    key = (len(rows), h.hexdigest(), use_lsh)
     cached = _AMAP_MEMO.get(key)
     if cached is not None:
         return cached
@@ -137,19 +92,14 @@ def alias_entity_map(
         if use_lsh
         else link.alias_similarity_edges(alias_dict)
     )
-    cmap = cc.canonical_map(alias_dict, sim)
-    rows = (
-        alias_dict.where(F.col("kind").isin("entity", "action"))
-        .join(cmap, "canonical_id")
-        .select("alias", "kind", "entity_id")
-        .collect()
-    )
+    cdict = dict(cached_rows(cc.canonical_map(alias_dict, sim)))
     amap = {
         r["alias"]: (
             "does" if r["kind"] == "action" else "mentions",
-            r["entity_id"],
+            cdict[r["canonical_id"]],
         )
         for r in rows
+        if r["kind"] in ("entity", "action")
     }
     _AMAP_MEMO[key] = amap
     return amap

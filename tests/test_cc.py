@@ -6,9 +6,14 @@ import random
 
 from pyspark.sql import functions as F
 
+from grepai_spark import dimcache
 from grepai_spark.cc import canonical_map, connected_components
 from grepai_spark.link import alias_similarity_edges
 from grepai_spark.synth import alias_dict_df
+
+# dimcache's driver-size cap: the default (driver path) and 0 (every bounded
+# input takes its distributed branch)
+CAPS = (dimcache.DRIVER_ROWS_CAP, 0)
 
 
 def _uf_components(edges, nodes):
@@ -27,9 +32,9 @@ def _uf_components(edges, nodes):
     return {n: find(n) for n in nodes}
 
 
-def test_cc_random_graphs(spark):
-    """Both regimes — driver union-find fast path (small_cutoff default) and
-    the distributed star loop (small_cutoff=0) — must agree with the oracle."""
+def test_cc_random_graphs(spark, monkeypatch):
+    """Both paths — driver union-find (default dimcache cap) and the
+    distributed star loop (cap 0) — must agree with the oracle."""
     rng = random.Random(42)
     for trial in range(3):
         n = 60
@@ -41,24 +46,25 @@ def test_cc_random_graphs(spark):
         df = spark.createDataFrame(edges, ["src", "dst"])
         touched = {x for e in edges for x in e}
         want = _uf_components(edges, sorted(touched))
-        for cutoff in (None, 0):
-            kw = {} if cutoff is None else {"small_cutoff": 0}
+        for cap in CAPS:
+            monkeypatch.setattr(dimcache, "DRIVER_ROWS_CAP", cap)
             got = {
                 r["node"]: r["component"]
-                for r in connected_components(df, **kw).collect()
+                for r in connected_components(df).collect()
             }
-            assert got == want, f"trial {trial} cutoff {cutoff}"
+            assert got == want, f"trial {trial} cap {cap}"
 
 
-def test_cc_chain_and_cycle(spark):
+def test_cc_chain_and_cycle(spark, monkeypatch):
     # long chain (worst case for naive propagation) + a cycle
     chain = [(f"c{i:02d}", f"c{i + 1:02d}") for i in range(20)]
     cycle = [("z1", "z2"), ("z2", "z3"), ("z3", "z1")]
     df = spark.createDataFrame(chain + cycle, ["src", "dst"])
-    for cutoff in ({}, {"small_cutoff": 0}):
+    for cap in CAPS:
+        monkeypatch.setattr(dimcache, "DRIVER_ROWS_CAP", cap)
         got = {
             r["node"]: r["component"]
-            for r in connected_components(df, **cutoff).collect()
+            for r in connected_components(df).collect()
         }
         assert all(got[f"c{i:02d}"] == "c00" for i in range(21))
         assert got["z1"] == got["z2"] == got["z3"] == "z1"

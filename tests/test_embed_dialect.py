@@ -142,7 +142,9 @@ def test_lsh_linking_matches_duckdb_on_hostile_dict(spark):
     """alias_similarity_edges_lsh vs the DuckDB banding replay on a dict
     with near-dup token sets, zero-token names, unicode, and one shared
     token set wide enough (> LSH_BUCKET_CAP aliases) that the per-bucket
-    cap decides the candidate set."""
+    cap decides the candidate set. The first-token blocking path
+    (alias_similarity_edges) is checked against its own replay on the
+    same dict."""
     from grepai_spark.schemas import ALIAS_DICT
 
     rows = [
@@ -166,20 +168,20 @@ def test_lsh_linking_matches_duckdb_on_hostile_dict(spark):
         rows.append((f"sharedTokenSet{i}", f"s{i}", "entity"))
 
     d = spark.createDataFrame(rows, schema=ALIAS_DICT)
-    got = sorted(
-        (r["src"], r["dst"])
-        for r in link.alias_similarity_edges_lsh(d).collect()
-    )
-
     con = duckdb.connect()
     con.register(
         "hd", pd.DataFrame(rows, columns=["alias", "canonical_id", "kind"])
     )
-    want = sorted(
-        tuple(r)
-        for r in con.execute(
-            oracles.alias_sim_edges_oracle(lsh=True, dict_rel="hd")
-        ).fetchall()
-    )
-    assert got == want
-    assert got, "hostile dict must actually produce similarity edges"
+    for lsh, sim_edges in (
+        (False, link.alias_similarity_edges),
+        (True, link.alias_similarity_edges_lsh),
+    ):
+        got = sorted((r["src"], r["dst"]) for r in sim_edges(d).collect())
+        want = sorted(
+            tuple(r)
+            for r in con.execute(
+                oracles.alias_sim_edges_oracle(lsh=lsh, dict_rel="hd")
+            ).fetchall()
+        )
+        assert got == want, f"lsh={lsh}"
+        assert got, "hostile dict must actually produce similarity edges"

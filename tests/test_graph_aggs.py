@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from grepai_spark import aggs, graphq
+from grepai_spark import aggs, dimcache, graphq
 
 EDGES = [
     # subj, pred, obj, conv_id, turn_idx, weight
@@ -29,26 +29,42 @@ def test_callers_callees(spark):
     assert got == {("t1", 1), ("t2", 1)}
 
 
-def test_bfs_depths_and_early_stop(spark):
-    e = _edges(spark)
-    got = {(r.node, r.depth) for r in graphq.bfs(e, "t3", depth=3).collect()}
-    # t3 <- t2 <- a <- {t1} <- {b}
-    assert got == {
-        ("t3", 0),
-        ("t2", 1),
-        ("a", 2),
-        ("t1", 3),
-    }
+# dimcache's driver-size cap: the default (driver traversal) and 0 (the
+# distributed frontier loop)
+CAPS = (dimcache.DRIVER_ROWS_CAP, 0)
 
 
-def test_bfs_hub_guard(spark):
+def test_bfs_depths_and_early_stop(spark, monkeypatch):
     e = _edges(spark)
-    # hub has degree 3; with hub_cap=2 it is reported but not expanded
-    got = {(r.node, r.depth) for r in graphq.bfs(e, "x1", depth=2, hub_cap=2).collect()}
-    assert got == {("x1", 0), ("hub", 1)}
-    # without the guard the other spokes appear at depth 2
-    got2 = {(r.node, r.depth) for r in graphq.bfs(e, "x1", depth=2).collect()}
-    assert got2 == {("x1", 0), ("hub", 1), ("x2", 2), ("x3", 2)}
+    for cap in CAPS:
+        monkeypatch.setattr(dimcache, "DRIVER_ROWS_CAP", cap)
+        got = {
+            (r.node, r.depth) for r in graphq.bfs(e, "t3", depth=3).collect()
+        }
+        # t3 <- t2 <- a <- {t1} <- {b}
+        assert got == {
+            ("t3", 0),
+            ("t2", 1),
+            ("a", 2),
+            ("t1", 3),
+        }, cap
+
+
+def test_bfs_hub_guard(spark, monkeypatch):
+    e = _edges(spark)
+    for cap in CAPS:
+        monkeypatch.setattr(dimcache, "DRIVER_ROWS_CAP", cap)
+        # hub has degree 3; with hub_cap=2 it is reported but not expanded
+        got = {
+            (r.node, r.depth)
+            for r in graphq.bfs(e, "x1", depth=2, hub_cap=2).collect()
+        }
+        assert got == {("x1", 0), ("hub", 1)}, cap
+        # without the guard the other spokes appear at depth 2
+        got2 = {
+            (r.node, r.depth) for r in graphq.bfs(e, "x1", depth=2).collect()
+        }
+        assert got2 == {("x1", 0), ("hub", 1), ("x2", 2), ("x3", 2)}, cap
 
 
 def test_feature_freq_deterministic_ties(spark):

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from grepai_spark import dedup, stores
+from grepai_spark import dedup, dimcache, stores
 from grepai_spark.storage import Catalog
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -45,10 +45,11 @@ def test_store_contents_match_their_derivations(spark):
     )
 
 
-def test_graph_adjacency_matches_per_query_derivation(spark):
+def test_graph_adjacency_matches_per_query_derivation(spark, monkeypatch):
     """Every (direction, preds) selection served from the stored census
     equals the distinct adjacency + degree a per-query derivation from the
-    edge table produces."""
+    edge table produces — both when the selection is loaded into driver
+    RAM (default dimcache cap) and when it is over the cap (cap 0)."""
     edges = stores.open_store(spark, SF_DIR, "kg_edges")
 
     def derive(direction, preds):
@@ -68,15 +69,21 @@ def test_graph_adjacency_matches_per_query_derivation(spark):
         ("both", ["calls"]),
         ("fwd", ["calls", "mentions"]),
     ]
-    for direction, preds in cases:
-        sa, sd = stores.graph_adjacency(spark, SF_DIR, direction, preds)
-        da, dd = derive(direction, preds)
-        assert sorted(map(tuple, sa.collect())) == sorted(
-            map(tuple, da.collect())
-        ), (direction, preds)
-        assert sorted(map(tuple, sd.collect())) == sorted(
-            map(tuple, dd.collect())
-        ), (direction, preds)
+    for cap in (dimcache.DRIVER_ROWS_CAP, 0):
+        monkeypatch.setattr(dimcache, "DRIVER_ROWS_CAP", cap)
+        # fresh selections, so each cap decides the preload itself
+        monkeypatch.setattr(stores, "_ADJ_MEMO", {})
+        for direction, preds in cases:
+            sa, sd = stores.graph_adjacency(spark, SF_DIR, direction, preds)
+            da, dd = derive(direction, preds)
+            for served, derived in ((sa, da), (sd, dd)):
+                want = sorted(map(tuple, derived.collect()))
+                got = sorted(map(tuple, served.collect()))
+                assert got == want, (cap, direction, preds)
+                if cap:
+                    # the driver-loaded rows bfs traverses
+                    loaded = sorted(map(tuple, dimcache.bounded_rows(served)))
+                    assert loaded == want, (cap, direction, preds)
 
 
 def test_ngram_posting_staged_to_storage_identical(spark, tmp_path):
