@@ -25,8 +25,10 @@ from __future__ import annotations
 
 import hashlib
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from grepai_spark.dedup import capped_bucket_pairs
 
 EMBED_TABLE_DIM = 64  # driver's embeddings.parquet vector width
 N_PLANES = 8
@@ -261,27 +263,6 @@ def ann_lsh_topk(
     )
 
 
-def write_lsh_bucketed(
-    emb: DataFrame,
-    path: str,
-    n_planes: int = N_PLANES,
-    vec_col: str = "embedding",
-) -> None:
-    """Materialize the embedding table PARTITIONED BY its sign-LSH bucket —
-    the batch job that turns ann_lsh_topk's per-row bucket expression into a
-    physical partition column. One pass over the corpus, one write; queries
-    then touch ~(1+n_planes)/2^n_planes of the files (multi-probe, see
-    ann_lsh_topk_bucketed). The repartition on bucket keeps file count =
-    O(buckets), not O(buckets x input-tasks) — without it every input task
-    writes a sliver into every bucket directory and the store degenerates
-    into 2^n_planes x tasks tiny files."""
-    emb.withColumn(
-        "bucket", F.expr(bucket_sql(vec_col, n_planes))
-    ).repartition(F.col("bucket")).write.mode("overwrite").partitionBy(
-        "bucket"
-    ).parquet(path)
-
-
 def ann_lsh_topk_store(
     store: DataFrame,
     query_vec: list[float],
@@ -307,24 +288,6 @@ def ann_lsh_topk_store(
         .orderBy(F.desc("score"), F.asc(id_col))
         .limit(k)
         .select(id_col, "score")
-    )
-
-
-def ann_lsh_topk_bucketed(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int,
-    n_planes: int = N_PLANES,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    hamming: int = 1,
-) -> DataFrame:
-    """ann_lsh_topk_store over a parquet path (opens the store per call —
-    fine for one-off queries; query services hold the store open)."""
-    return ann_lsh_topk_store(
-        spark.read.parquet(path), query_vec, k, n_planes, vec_col, id_col,
-        hamming,
     )
 
 
@@ -400,51 +363,31 @@ def near_dup_cosine_pairs(
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs, blocked by coarse cell.
 
-    Pair generation is an equi-join on the cell id (never a cross join), and
-    cell membership is capped deterministically (first `cell_cap` ids per
-    cell) BEFORE pairing — the same block-cap guard every other pair
-    generator here carries (dedup._bucket_pairs, link block cap): without
-    it one hot cell goes O(k^2) no matter how well the join partitions.
+    Candidates come from dedup.capped_bucket_pairs keyed on the cell id: an
+    equi-join (never a cross join) over the first `cell_cap` ids per cell,
+    the block-cap guard every pair generator here shares — without it one
+    hot cell goes O(k^2) no matter how well the join partitions. Each
+    vector's norm is computed once, before pairing, and rides into the join.
     """
-    w = Window.partitionBy(cell_col).orderBy(id_col)
-    emb = (
-        emb.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= cell_cap)
-        .drop("_rn")
+    rows = emb.select(
+        cell_col,
+        id_col,
+        F.col(vec_col).alias("v"),
+        F.sqrt(F.expr(dot_sql_self(vec_col, dim=EMBED_TABLE_DIM))).alias("nv"),
     )
-    # Parallelism floor (r7): same guard as near_dup_lsh_pairs — the capped
-    # cell table is small enough that AQE coalesces the window's shuffle
-    # output to ~1 partition, serializing the pair join's O(candidate x dim)
-    # cosine verify into one task. The keyed repartition is exempt from AQE
-    # coalescing and a no-op at corpus scale (guard: input already wider
-    # than 2x cores).
-    spark = emb.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < 2 * cores:
-        emb = emb.repartition(2 * cores, cell_col)
-    a = emb.select(
-        F.col(cell_col).alias("cell"),
-        F.col(id_col).alias("a_id"),
-        F.col(vec_col).alias("va"),
+    pairs = capped_bucket_pairs(
+        rows, [cell_col], id_col, cell_cap, carry=("v", "nv")
     )
-    b = emb.select(
-        F.col(cell_col).alias("cell"),
-        F.col(id_col).alias("b_id"),
-        F.col(vec_col).alias("vb"),
-    )
-    # pair dot as the zip_with fold (see pair_dot_sql for why); the norms
-    # keep the width-unrolled self-dot
-    dot = F.expr(pair_dot_sql("va", "vb"))
-    na = F.sqrt(F.expr(dot_sql_self("va", dim=EMBED_TABLE_DIM)))
-    nb = F.sqrt(F.expr(dot_sql_self("vb", dim=EMBED_TABLE_DIM)))
-    cos = dot / (na * nb)
+    # pair dot as the zip_with fold (see pair_dot_sql for why)
+    cos = F.expr(pair_dot_sql("v_a", "v_b")) / (F.col("nv_a") * F.col("nv_b"))
     return (
-        a.join(b, "cell")
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn("_cos", cos)
+        pairs.withColumn("_cos", cos)
         .where(F.col("_cos") >= F.lit(threshold))
         .select(
-            "a_id", "b_id", F.col("cell"), F.round("_cos", 6).alias("cos")
+            "a_id",
+            "b_id",
+            F.col(cell_col).alias("cell"),
+            F.round("_cos", 6).alias("cos"),
         )
     )
 
@@ -461,7 +404,6 @@ def near_dup_lsh_pairs(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
     bucket_cap: int = NEAR_DUP_CELL_CAP,
-    materialize: bool = True,
 ) -> DataFrame:
     """Embedding near-dup pairs WITHOUT a precomputed coarse-cell column:
     bucket = sign-LSH signature of the vector, OR-amplified across `n_sets`
@@ -490,59 +432,23 @@ def near_dup_lsh_pairs(
     )
     # the vector's norm is computed ONCE per (vector, set) row here — not
     # per candidate pair in the join below, where it would be the dominant
-    # redundant work (each vector meets ~bucket_size partners)
-    b = emb.select(
-        F.col(id_col).alias("the_id"),
+    # redundant work (each vector meets ~bucket_size partners). The
+    # operator materializes these rows once, so the n_sets x n_planes
+    # bucket signatures (each a dim-length fold per plane) are not
+    # recomputed for the second join side either.
+    rows = emb.select(
+        F.col(id_col),
         F.col(vec_col).alias("v"),
         F.sqrt(F.expr(dot_sql_self(vec_col, dim=EMBED_TABLE_DIM))).alias("nv"),
         F.posexplode(sigs).alias("set_id", "bkt"),
     )
-    w = Window.partitionBy("set_id", "bkt").orderBy("the_id")
-    # Materialized ONCE: both join sides below consume this table, and an
-    # unshared subtree would compute the n_sets x n_planes bucket
-    # signatures (each a dim-length fold per plane) TWICE per vector —
-    # the dominant cost of candidate generation. localCheckpoint is the
-    # repo's materialize-once idiom (blocks release with the plan).
-    b = (
-        b.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= bucket_cap)
-        .drop("_rn")
-    )
-    # Parallelism floor (r7, guide §2.5/§2.6): the capped banded table is
-    # small, so AQE coalesces the window's shuffle output down to ~1
-    # partition — and every narrow op downstream inherits it, serializing
-    # the pair join's O(candidate x dim) cosine verify (measured: the whole
-    # 2M-pair verify ran as ONE task at sf0.1). An explicit keyed
-    # repartition is exempt from AQE coalescing; 2x cores smooths uneven
-    # bucket sizes. At corpus scale the banded table already has more
-    # partitions than cores and this is a no-op.
-    spark = emb.sparkSession
-    cores = spark.sparkContext.defaultParallelism
-    if emb.rdd.getNumPartitions() < 2 * cores:
-        b = b.repartition(2 * cores, "set_id", "bkt")
-    if materialize:  # ADVICE r4: plan-only consumers can opt out
-        b = b.localCheckpoint(eager=True)
-    a = b.select(
-        "set_id",
-        "bkt",
-        F.col("the_id").alias("a_id"),
-        F.col("v").alias("va"),
-        F.col("nv").alias("na"),
-    )
-    c = b.select(
-        "set_id",
-        "bkt",
-        F.col("the_id").alias("b_id"),
-        F.col("v").alias("vb"),
-        F.col("nv").alias("nb"),
+    pairs = capped_bucket_pairs(
+        rows, ["set_id", "bkt"], id_col, bucket_cap, carry=("v", "nv")
     )
     # pair dot as the zip_with fold (see pair_dot_sql for why)
-    dot = F.expr(pair_dot_sql("va", "vb"))
-    cos = dot / (F.col("na") * F.col("nb"))
+    cos = F.expr(pair_dot_sql("v_a", "v_b")) / (F.col("nv_a") * F.col("nv_b"))
     return (
-        a.join(c, ["set_id", "bkt"])
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn("_cos", cos)
+        pairs.withColumn("_cos", cos)
         .where(F.col("_cos") >= F.lit(threshold))
         .select("a_id", "b_id", F.round("_cos", 6).alias("cos"))
         .distinct()

@@ -191,38 +191,55 @@ def with_shingles(
     )
 
 
-def _bucket_pairs(
-    banded: DataFrame,
-    key: str,
+def capped_bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
     id_col: str,
-    cap: int = DF_CAP,
+    cap: int,
+    carry: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Candidate id pairs per bucket, in ONE pass over the bucketed rows.
+    """The similarity-join family's one candidate generator: every pair of
+    ids sharing a bucket, among the first `cap` ids of each bucket by id.
 
-    groupBy(bucket) + in-bucket pair expansion replaces a self-join that
-    would re-execute the (hashing) producer plan twice. Bucket membership is
-    capped deterministically (sorted ids, first `cap`) — the reference's
-    block-cap skew guard (/root/reference/rpg/indexer.go:20) — so one hot
-    bucket can never go quadratic at corpus scale.
+    Returns (*keys, a_id, b_id, <c>_a, <c>_b for c in carry) with
+    a_id < b_id; a pair meeting in several buckets appears once per bucket,
+    so callers dedup after their verify. (keys, id) must be unique.
+
+    * The cap is the reference's block-cap skew guard (rpg/indexer.go:20):
+      one hot bucket can never go quadratic at corpus scale. Keeping the
+      first `cap` by sorted id makes it deterministic.
+    * The floor: the capped table is small, so AQE would coalesce an
+      ordinary shuffle of it to ~1 partition, and every narrow op
+      downstream — the whole pair verify — would run as one task (r7 F3).
+      A keyed repartition with an explicit count is exempt from
+      coalescing. It satisfies both the window's and the self-join's
+      distribution, so it is the operator's only exchange, read by both
+      join sides.
+    * The input rows are materialized once, first: the producer plan
+      (hashing, signatures, norms) then runs once per row. The checkpoint
+      comes before the repartition because a checkpoint forgets its
+      partitioning under AQE; after the window it would make the join
+      shuffle again, and that shuffle coalesces.
     """
-    grp = (
-        banded.groupBy(key)
-        .agg(
-            F.slice(
-                F.array_sort(F.collect_set(F.col(id_col))), 1, cap
-            ).alias("ids")
+    n = int(rows.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    w = Window.partitionBy(*keys).orderBy(id_col)
+    capped = (
+        rows.select(*keys, id_col, *carry)
+        .localCheckpoint(eager=True)
+        .repartition(n, *keys)
+        .withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= cap)
+        .drop("_rn")
+    )
+
+    def side(s: str) -> DataFrame:
+        return capped.select(
+            *keys,
+            F.col(id_col).alias(f"{s}_id"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
         )
-        .where(F.size("ids") >= 2)
-    )
-    pairs = F.expr(
-        "filter(flatten(transform(ids, x -> transform(ids,"
-        " y -> named_struct('a_id', x, 'b_id', y)))), p -> p.a_id < p.b_id)"
-    )
-    return (
-        grp.select(F.explode(pairs).alias("p"))
-        .select("p.a_id", "p.b_id")
-        .dropDuplicates(["a_id", "b_id"])
-    )
+
+    return side("a").join(side("b"), keys).where(F.col("a_id") < F.col("b_id"))
 
 
 def _verified_pairs(
@@ -252,9 +269,6 @@ def ngram_jaccard_pairs(
     df_cap: int = DF_CAP,
     id_col: str = "doc_id",
     text_col: str = "text",
-    catalog: "Catalog | None" = None,
-    posting_table: str = "ngram_posting",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs by word-n-gram Jaccard >= threshold, computed over
     the STOP-SHINGLE-FILTERED sets (shingles in more than `df_cap` docs are
@@ -269,48 +283,31 @@ def ngram_jaccard_pairs(
     sh = with_shingles(docs, text_col, n).select(id_col, "shingles")
     # Materialize the posting list ONCE: it feeds three consumers (the
     # hub-shingle DF census, the per-doc size census, and the pair counts),
-    # and Spark re-executes an unshared subtree per consumer — at corpus
-    # scale that is three full scans + re-shingling passes for one logical
-    # derivation. Two regimes (the cc.py broadcast-vs-shuffle pattern):
-    #
-    # * `catalog` given — the posting table is STAGED TO STORAGE and read
-    #   back (one write + three cheap scans). This is the 100 TB regime:
-    #   the posting list is O(total tokens) and must not be pinned in
-    #   executor memory/disk the way localCheckpoint blocks are (PERF §24).
-    # * default — localCheckpoint, this repo's in-session materialize-once
-    #   idiom (blocks release with the plan via ContextCleaner, unlike
-    #   CacheManager-pinned persist). `materialize=False` opts out entirely
-    #   for plan-only consumers (.explain() without paying a job).
-    posting = sh.select(F.col(id_col), F.explode("shingles").alias("g"))
-    if catalog is not None:
-        catalog.overwrite(posting_table, posting)
-        posting = catalog.read(posting_table)
-    elif materialize:
-        posting = posting.localCheckpoint(eager=True)
+    # and Spark re-executes an unshared subtree per consumer — three full
+    # scans + re-shingling passes for one logical derivation.
+    # localCheckpoint is this repo's in-session materialize-once idiom
+    # (blocks release with the plan via ContextCleaner, unlike
+    # CacheManager-pinned persist).
+    posting = sh.select(
+        F.col(id_col), F.explode("shingles").alias("g")
+    ).localCheckpoint(eager=True)
     non_hub = (
         posting.groupBy("g")
         .agg(F.count("*").alias("df"))
         .where(F.col("df") <= df_cap)
         .select("g")
     )
-    p2 = posting.join(non_hub, "g")
     # Materialize the hub-FILTERED posting once too (r7): p2 feeds three
     # consumers (pair counts + both sides of the size join), and an
     # unshared p2 subtree re-ran the non_hub census and the hub join per
     # consumer — the before-plan carried the non_hub aggregate and the
-    # filter join 3x each (24 exchanges total). Same two regimes as the
-    # posting list: staged to storage at corpus scale, localCheckpoint
-    # in-session.
-    if catalog is not None:
-        catalog.overwrite(posting_table + "_filtered", p2)
-        p2 = catalog.read(posting_table + "_filtered")
-    elif materialize:
-        p2 = p2.localCheckpoint(eager=True)
+    # filter join 3x each (24 exchanges total).
+    p2 = posting.join(non_hub, "g").localCheckpoint(eager=True)
     sizes = p2.groupBy(id_col).agg(F.count("*").alias("n_sh"))
     # Pair counts via a plain self-equi-join on the MATERIALIZED filtered
     # posting (r7): the one-pass bucket expansion existed to avoid
     # re-executing the posting producer twice, but with p2 materialized the
-    # join reads storage/blocks twice for free and stays entirely inside
+    # join reads the blocks twice for free and stays entirely inside
     # whole-stage codegen — the ObjectHashAggregate + interpreted nested
     # transform() of _bucket_pair_counts was 1.8 s of the sf0.1 wall vs
     # 0.54 s for this join at identical candidate volume (1.27M pairs).
@@ -346,7 +343,6 @@ def minhash_lsh_pairs(
     n: int = SHINGLE_N,
     id_col: str = "doc_id",
     text_col: str = "text",
-    materialize: bool = True,
 ) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact Jaccard verify.
 
@@ -360,11 +356,12 @@ def minhash_lsh_pairs(
     # Materialized ONCE (same rationale as ngram_jaccard_pairs' posting):
     # the shingle sets feed the signature derivation AND both sides of the
     # exact-Jaccard verify join — unshared, that is three scans +
-    # re-shingling passes over the corpus. `materialize=False` keeps the
-    # plan lazy for plan-only consumers (ADVICE r4).
-    sh = with_shingles(docs, text_col, n).select(id_col, "shingles")
-    if materialize:
-        sh = sh.localCheckpoint(eager=True)
+    # re-shingling passes over the corpus.
+    sh = (
+        with_shingles(docs, text_col, n)
+        .select(id_col, "shingles")
+        .localCheckpoint(eager=True)
+    )
     # Hashing happens on the EXPLODED posting list in a flat projection —
     # md5 inside a higher-order-function lambda is interpreted row-at-a-time
     # (no codegen); explode + groupBy(min) keeps it in WholeStageCodegen and
@@ -395,7 +392,11 @@ def minhash_lsh_pairs(
     banded = sigs.select(
         F.col(id_col), F.explode(F.array(*band_keys)).alias("band_key")
     )
-    cand = _bucket_pairs(banded, "band_key", id_col, cap=DF_CAP)
+    cand = (
+        capped_bucket_pairs(banded, ["band_key"], id_col, DF_CAP)
+        .select("a_id", "b_id")
+        .dropDuplicates()
+    )
     return _verified_pairs(cand, sh, threshold, id_col)
 
 
@@ -469,32 +470,11 @@ def simhash_pairs(
     banded = sig.select(
         F.col(id_col), "sig", F.explode(F.array(*keys)).alias("bk")
     )
-    # Capped-bucket pairs via window cap + codegen self-join (r7): the
-    # previous one-pass collect_set(struct) expansion paid an
-    # ObjectHashAggregate plus an interpreted nested transform() per bucket
-    # — the same HOF tax the ngram pair counts dropped. (bk, doc) is unique
-    # (band tags partition the key space) and docs carry one sig each, so
-    # row_number ordered by doc id keeps exactly the members the sorted
-    # struct slice kept. The capped table is materialized once for both
-    # join sides.
-    w = Window.partitionBy("bk").orderBy(id_col)
-    capped = (
-        banded.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= DF_CAP)
-        .drop("_rn")
-        .localCheckpoint(eager=True)
-    )
-    a = capped.select(
-        "bk", F.col(id_col).alias("a_id"), F.col("sig").alias("sig_a")
-    )
-    b = capped.select(
-        "bk", F.col(id_col).alias("b_id"), F.col("sig").alias("sig_b")
-    )
+    # (bk, doc) is unique: band tags partition the key space
+    pairs = capped_bucket_pairs(banded, ["bk"], id_col, DF_CAP, carry=("sig",))
     ham = F.expr(hamming_sql("sig_a", "sig_b"))
     return (
-        a.join(b, "bk")
-        .where(F.col("a_id") < F.col("b_id"))
-        .withColumn("hamming", ham.cast("int"))
+        pairs.withColumn("hamming", ham.cast("int"))
         .where(F.col("hamming") <= max_hamming)
         .dropDuplicates(["a_id", "b_id"])
         .select("a_id", "b_id", "hamming")

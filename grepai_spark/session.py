@@ -18,7 +18,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0)))
+    )
     master = master or f"local[{cpus}]"
     # Rule of thumb: shuffle partitions ~ 2x cores locally; on a real cluster this
     # is sized so a post-shuffle partition stays well under executor memory
@@ -66,6 +68,10 @@ def get_spark(
         # that host read 257k/254k turns/sec vs 238k unmitigated, with
         # EVERY per-query wall improved (near-dup LSH 18.9 -> 2.2/2.3 s).
         # Scale-independent: bounds generated-code method size, not data.
+        # Both codegen keys are internal: the A/B above was measured on
+        # Spark 4.x, and this tree is exercised on 4.1.2.
+        # tests/test_session.py reads them back through the typed SQLConf
+        # accessors, which fail if Spark stops recognizing a key.
         .config("spark.sql.codegen.methodSplitThreshold", "256")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

@@ -2,8 +2,9 @@
 
 The reference caps hot groups outright (block cap 100
 /root/reference/rpg/indexer.go:20, hub cap 50 rpg/indexer.go:26). Caps are
-kept where they mirror reference semantics (link.py, materialize.py,
-dedup.py); this module adds the other standard tool: SALTING, for exact
+kept where they mirror reference semantics (link.py, materialize.py, and
+dedup.capped_bucket_pairs, the similarity-join family's one capped candidate
+operator); this module adds the other standard tool: SALTING, for exact
 aggregations that must not drop data when one key is huge (the mega-thread:
 one conv_id holding ~25% of all turns in the fixture, millions of turns in
 production).

@@ -107,6 +107,8 @@ def _build(
         )
     elif kind == "lsh_store":
         emb = synth.read_parallel(spark, f"{sf_dir}/embeddings.parquet")
+        # repartition on the bucket: O(buckets) files, not one sliver per
+        # (bucket, input task)
         catalog.overwrite(
             kind,
             emb.withColumn(

@@ -19,16 +19,12 @@ separately.
 from __future__ import annotations
 
 import random
-import sys
 
 import duckdb
 import pandas as pd
+from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from grepai_spark import embed, link, oracles  # noqa: E402
+from grepai_spark import embed, link, oracles
 
 
 def test_slot_hash_three_way_lockstep():

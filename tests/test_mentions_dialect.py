@@ -12,15 +12,11 @@ dictionary is ever interpolated into SQL.
 
 from __future__ import annotations
 
-import sys
-
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-from grepai_spark import extract  # noqa: E402
-from grepai_spark.synth import alias_dict_df  # noqa: E402
+from grepai_spark import extract
+from grepai_spark.synth import alias_dict_df
 
 
 def _adversarial_turns() -> list[str]:

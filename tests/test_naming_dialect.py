@@ -22,16 +22,12 @@ ASCII by the dictionary loader's contract.
 from __future__ import annotations
 
 import random
-import sys
 
 import duckdb
 import pandas as pd
+from pyspark.sql import functions as F
 
-sys.path.insert(0, "/root/repo")
-
-from pyspark.sql import functions as F  # noqa: E402
-
-from grepai_spark import naming  # noqa: E402
+from grepai_spark import naming
 
 
 def _adversarial_names() -> list[str]:

@@ -12,14 +12,11 @@ never interpolated into SQL.
 from __future__ import annotations
 
 import random
-import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
-
-import __spark_entry__ as entry  # noqa: E402
+import __spark_entry__ as entry
 
 
 def _adversarial_corpus() -> list[str]:

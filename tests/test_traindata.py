@@ -299,6 +299,31 @@ def test_near_dup_cell_cap_bounds_hot_cell(spark):
     assert len(pairs) == 45
     assert max(b for _, b in pairs) == 9
 
+    # the shared operator directly, in the near_dup_lsh shape: a two-column
+    # key, one hot bucket (0, 'h') with 40 ids and a small one (1, 'h'),
+    # one carried column whose value encodes its row's id
+    rows = [(0, "h", i, f"v{i}") for i in range(40)]
+    rows += [(1, "h", i, f"v{i}") for i in (5, 3, 7)]
+    df = spark.createDataFrame(rows, "set_id int, bkt string, id long, v string")
+    out = dedup.capped_bucket_pairs(df, ["set_id", "bkt"], "id", 10, ("v",))
+    got = out.collect()
+    by_key = {}
+    for r in got:
+        assert r["a_id"] < r["b_id"]
+        assert (r["v_a"], r["v_b"]) == (f"v{r['a_id']}", f"v{r['b_id']}")
+        by_key.setdefault((r["set_id"], r["bkt"]), set()).add(
+            (r["a_id"], r["b_id"])
+        )
+    # the cap holds per bucket: the hot bucket keeps ids 0..9 only
+    hot = by_key[(0, "h")]
+    assert len(hot) == 45 and max(b for _, b in hot) == 9
+    assert by_key[(1, "h")] == {(3, 5), (3, 7), (5, 7)}
+    assert len(got) == 48
+    # the parallelism floor: the pair verify downstream must not collapse
+    # into one task, whatever AQE does to the small capped table
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert out.rdd.getNumPartitions() == n
+
 
 def test_ivf_precomputed_centroids_match(spark, emb):
     """ivf_topk with a stored centroid table (the at-scale path) must return
@@ -430,18 +455,18 @@ def test_image_features_matches_decoded_pixels(spark, docs):
         assert (r["sum_r"], r["sum_g"], r["sum_b"]) == tuple(int(x) for x in sums)
 
 
-def test_ann_lsh_bucketed_prunes_partitions(spark, tmp_path):
-    """The bucket-partitioned ANN store: identical top-k to the expression
-    path, and the scan's physical plan carries the bucket as a PARTITION
-    filter (directory pruning), not a row filter."""
-    from grepai_spark.embed import py_encode
+def test_ann_lsh_bucketed_prunes_partitions(spark):
+    """The bucket-partitioned ANN store (stores' `lsh_store`, the path that
+    serves): identical top-k to the expression path, and the scan's
+    physical plan carries the bucket as a PARTITION filter (directory
+    pruning), not a row filter."""
+    from grepai_spark import stores
 
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
-    store = str(tmp_path / "emb_by_bucket")
-    ann.write_lsh_bucketed(emb, store)
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    store = stores.open_store(spark, SF_DIR, "lsh_store")
 
     q = py_encode("scan filter join", dim=64)
-    got = ann.ann_lsh_topk_bucketed(spark, store, q, 10)
+    got = ann.ann_lsh_topk_store(store, q, 10)
     want = ann.ann_lsh_topk(emb, q, 10)
     assert [tuple(r) for r in got.collect()] == [
         tuple(r) for r in want.collect()

@@ -8,11 +8,14 @@ Usage: python tools/check_oracles.py [sf_dir] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+# import the checkout this script lives in, wherever it is run from
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part", "orders",
@@ -46,6 +49,10 @@ def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
 
+    # the Python workers Spark starts import the same checkout
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as e
     from grepai_spark.session import get_spark
 
